@@ -3,9 +3,12 @@ workload."""
 
 from __future__ import annotations
 
+import ctypes
 import json
 import os
+import signal
 import statistics
+import subprocess
 import threading
 import time
 import uuid
@@ -43,6 +46,75 @@ class LoadSampler:
         self._stop.set()
         self._t.join(timeout=5)
         return {"loadavg_1m_before": self.before, "loadavg_1m_max": self.max}
+
+
+# ---------------------------------------------------------------------------
+# processes
+# ---------------------------------------------------------------------------
+
+PR_SET_CHILD_SUBREAPER = 36
+
+
+def adopt_orphans() -> None:
+    """Make this process the subreaper of everything it starts, so the
+    Python daemon and workers the Spark JVM forks become its children
+    when the JVM exits, and ``reap_children`` can wait for them."""
+    ctypes.CDLL(None, use_errno=True).prctl(PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0)
+
+
+def stop_session(spark) -> None:
+    """Stop the Spark session, then the JVM PySpark launched for it, and
+    wait until the JVM has exited. ``spark.stop()`` alone leaves the JVM
+    running until some time after this process has ended."""
+    from pyspark import SparkContext
+
+    gateway = SparkContext._gateway
+    try:
+        if spark is not None:
+            spark.stop()
+    finally:
+        proc = getattr(gateway, "proc", None)
+        SparkContext._gateway = SparkContext._jvm = None
+        if proc is not None:
+            proc.stdin.close()  # the JVM exits on end of file on its stdin
+            try:
+                proc.wait(timeout=60)
+            except subprocess.TimeoutExpired:
+                proc.kill()
+                proc.wait()
+
+
+def _children() -> list[int]:
+    me, kids = os.getpid(), []
+    for d in os.listdir("/proc"):
+        if not d.isdigit():
+            continue
+        try:
+            with open(f"/proc/{d}/stat") as f:
+                fields = f.read().rsplit(")", 1)[1].split()
+        except OSError:
+            continue
+        if int(fields[1]) == me:
+            kids.append(int(d))
+    return kids
+
+
+def reap_children(grace_s: float = 30.0) -> None:
+    """Wait until every child process, adopted ones included, has ended.
+    Children still running after ``grace_s`` get SIGTERM, and SIGKILL
+    five seconds later."""
+    start = time.monotonic()
+    while kids := _children():
+        waited = time.monotonic() - start
+        sig = signal.SIGKILL if waited > grace_s + 5 else signal.SIGTERM if waited > grace_s else None
+        for pid in kids:
+            try:
+                if sig is not None:
+                    os.kill(pid, sig)
+                os.waitpid(pid, os.WNOHANG)
+            except (ChildProcessError, ProcessLookupError):
+                pass
+        time.sleep(0.05)
 
 
 # ---------------------------------------------------------------------------

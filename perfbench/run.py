@@ -16,6 +16,7 @@ import argparse
 import json
 import os
 import shutil
+import signal
 import sys
 import time
 
@@ -102,6 +103,9 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--tiny", action="store_true", help="smoke-test input sizes")
     args = ap.parse_args(argv)
+    # SIGTERM unwinds like an exception, so the session is stopped and
+    # every process the run started is waited for on every path out
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(128 + signal.SIGTERM))
 
     sys.path.insert(0, ROOT)
     sys.path.insert(0, HERE)
@@ -111,11 +115,13 @@ def main(argv: list[str] | None = None) -> int:
     work_root = os.path.join(ROOT, ".perfbench_work")
     work = os.path.join(work_root, f"{args.workload}-{args.seed}-{os.getpid()}")
     _env(work)  # before the session starts: the JVM and its workers read it
+    harness.adopt_orphans()
     load = harness.LoadSampler()
     tracer = harness.Tracer(enabled=bool(args.trace))
     try:
         metrics, loop, record = _run(args, work, tracer, WORKLOADS[args.workload])
     finally:
+        harness.reap_children()
         shutil.rmtree(work, ignore_errors=True)
     record.update(load.close())
     if args.trace:
@@ -180,8 +186,7 @@ def _run(args, work: str, tracer, workload_cls):
                 "call_p50_s": harness.median(lat),
             }
     finally:
-        if spark is not None:
-            spark.stop()
+        harness.stop_session(spark)
     record = {
         "workload": args.workload, "seed": args.seed, "trace": args.trace,
         "calls": len(loop.calls), "latency_samples": len(lat),
