@@ -11,10 +11,13 @@ Scale design notes
   and only the survivors pay the exact ray-cast pandas UDF. At 100 TB the
   expensive UDF therefore touches ~(points near any polygon edge cell)
   rows, not all points.
-- kNN: two implementations. ``knn_bruteforce`` (cross-join; ORACLE-able in
-  ANSI SQL, used as the correctness reference) and ``knn_cells`` — ring
-  expansion over grid cells: r=0,1,2,... joins, stopping per-query as soon
-  as k neighbors are guaranteed correct (found-distance <= ring reach).
+- kNN: one ring-expansion loop (``_knn_rings``) over two tilings —
+  ``knn_cells`` (planar grid cells, Chebyshev shells) and ``knn_h3``
+  (H3 grid-distance shells). Ring r=0,1,2,... joins only its shell of
+  cells, stopping per query as soon as its k neighbors are guaranteed
+  correct (k-th distance <= the tiling's finish radius at ring r).
+  ``knn_bruteforce`` (cross-join; ORACLE-able in ANSI SQL) is the
+  correctness reference for both.
 - Rollups: straight groupBy(cell) + optional two-phase SALTED variant for
   skewed hot cells (one city = 25% of traffic in the synth world): partial
   agg on (cell, salt) then final merge — the classic skew-safe pattern.
@@ -23,6 +26,7 @@ Scale design notes
 from __future__ import annotations
 
 import math
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
@@ -239,98 +243,114 @@ def knn_bruteforce(
     )
 
 
-def knn_cells(
-    queries: DataFrame,
+def _knn_target_join(shell_df: DataFrame, t: DataFrame, no_bc: bool) -> DataFrame:
+    """One ring's candidate join: broadcast under the byte gate, shuffle
+    hash join on the cell key above it (both sides hash-partition on
+    ``_cell``; the plan must contain no BroadcastExchange in that
+    regime — asserted by test_plan_shape)."""
+    if no_bc:
+        j = shell_df.hint("shuffle_hash").join(t, F.col("_cell") == t._tcell, "inner")
+    else:
+        j = shell_df.join(F.broadcast(t), F.col("_cell") == t._tcell, "inner")
+    return j.withColumn(
+        "dist_km",
+        F.round(
+            haversine_col(F.col("lat"), F.col("lon"), F.col("_tlat"), F.col("_tlon")),
+            9,
+        ),
+    ).drop("_cell", "_tcell", "_tlat", "_tlon")
+
+
+def _targets_too_big_to_broadcast(t: DataFrame, broadcast_max_bytes: int) -> bool:
+    """The cascade's byte gate (geocode.py build_gazetteer_index), reused
+    for kNN target tables: estimate serialized bytes from a sampled row
+    width x count and refuse to broadcast above the budget — a
+    planet-scale POI corpus must degrade to a shuffle join on the cell
+    key, not OOM the executors."""
+    from .geocode import _avg_row_bytes
+
+    n = t.count()
+    return n * _avg_row_bytes(t) > broadcast_max_bytes
+
+
+def _knn_rings(
+    q: DataFrame,
     targets: DataFrame,
-    k: int = 5,
-    query_id: str = "query_id",
-    target_id: str = "place_id",
-    cells_per_degree: int = 32,
-    max_rings: int = 8,
-    broadcast_max_bytes: int = 800 * 1024 * 1024,
-    force_no_broadcast: bool = False,
+    target_cell: Column,
+    k: int,
+    query_id: str,
+    target_id: str,
+    max_rings: int,
+    broadcast_max_bytes: int,
+    ring: Callable[[int, DataFrame], tuple[DataFrame, Callable[[DataFrame], DataFrame]] | None],
 ) -> DataFrame:
-    """Scale-path kNN: grid-cell ring expansion (SURVEY.md J10/W4).
+    """The ring-expansion driver loop behind ``knn_cells`` and ``knn_h3``.
 
-    INCREMENTAL shells: ring r joins only the cells at Chebyshev distance
-    exactly r (the 8r-cell shell, not the whole (2r+1)^2 block), and the
-    scored candidates accumulate across rings — every (query, target) pair
-    is scored exactly once. A query's result is final once its k-th
-    neighbor distance is <= the minimum distance any target OUTSIDE the
-    searched block could have (r cells of guaranteed reach); unfinished
-    queries continue to the next ring. Driver loop depth <= max_rings.
+    ``q`` is the query frame tagged with the tiling's per-query columns and
+    ``target_cell`` the tiling's cell of a ``lat``/``lon`` row. The tiling
+    hands out ring r for the still-unfinished queries as
+    ``ring(r, remaining) -> (shell, radius)``: ``shell`` is ``remaining``
+    with one row per ring-r cell in ``_cell``, and ``radius(topk)`` adds
+    ``_radius``, the distance (km) within which every target of the row's
+    query has been scored once ring r is joined — ``inf`` when no cell is
+    left unsearched. ``ring`` returns None when no query has an unsearched
+    cell left, which makes everything found final.
 
-    The target projection broadcasts only under the byte gate
+    Ring r joins only its shell and the scored candidates accumulate, so
+    every (query, target) pair is scored once. A query is final once its
+    k-th distance (infinite with fewer than k found) is within its radius;
+    the others go on to the next ring. At ``max_rings`` everything found is
+    final. The target projection broadcasts only under the byte gate
     (``broadcast_max_bytes``); above it each ring's join degrades to a
-    shuffle hash join on the cell key instead of OOMing on a
-    planet-scale target corpus.
+    shuffle hash join on the cell key instead of OOMing on a planet-scale
+    target corpus.
     """
-    w_cells = 360 * cells_per_degree
-    # narrow projection cached: each ring is its own action (see knn_h3)
+    # cache the NARROW target projection (id, lat, lon, cell — ~32 B/row,
+    # spillable): every ring is a separate action, so an uncached t would
+    # re-scan the corpus and re-run the cell tagging per ring
     t = targets.select(
         F.col(target_id).alias("_tid"),
         F.col("lat").alias("_tlat"),
         F.col("lon").alias("_tlon"),
-        grid_cell_col(F.col("lat"), F.col("lon"), cells_per_degree).alias("_tcell"),
+        target_cell.alias("_tcell"),
     ).cache()
-    no_bc = _targets_too_big_to_broadcast(t, broadcast_max_bytes, force_no_broadcast)
-
-    q = queries.withColumn("_qcell", grid_cell_col(F.col("lat"), F.col("lon"), cells_per_degree))
-    # cell height in km (lat direction is uniform; lon shrinks with cos(lat),
-    # so the lat-based bound is the safe one at |lat| < 66 deg for ring math
-    # we use the smaller km-per-cell of the two axes at the query latitude)
-    cell_h_km = 111.19492664455873 / cells_per_degree
-
+    wnd = Window.partitionBy(query_id).orderBy(F.col("dist_km").asc(), F.col("_tid").asc())
     remaining = q
     acc: DataFrame | None = None  # scored candidates of still-unfinished queries
     done_parts: list[DataFrame] = []
     try:
+        no_bc = _targets_too_big_to_broadcast(t, broadcast_max_bytes)
         for r in range(max_rings + 1):
-            offs = [
-                (dy, dx)
-                for dy in range(-r, r + 1)
-                for dx in range(-r, r + 1)
-                if max(abs(dy), abs(dx)) == r  # shell only
-            ]
-            offs_arr = F.array(*[F.lit(dy * w_cells + dx) for dy, dx in offs])
-            exploded = (
-                remaining.withColumn("_off", F.explode(offs_arr))
-                .withColumn("_cell", F.col("_off") + F.col("_qcell"))
-                .drop("_off")
-            )
-            shell = _knn_target_join(exploded, t, no_bc)
-            acc = shell if acc is None else acc.unionByName(shell)
-            # materialize: the shell join + every prior ring would otherwise be
-            # re-evaluated by the window, the finish filter AND the next ring
-            acc = acc.localCheckpoint(eager=True)
-
-            wnd = Window.partitionBy(query_id).orderBy(F.col("dist_km").asc(), F.col("_tid").asc())
+            step = ring(r, remaining)
+            if step is not None:
+                shell, radius = step
+                cand = _knn_target_join(shell, t, no_bc)
+                acc = cand if acc is None else acc.unionByName(cand)
+                # materialize: the shell join + every prior ring would otherwise
+                # be re-evaluated by the window, the finish filter AND the next ring
+                acc = acc.localCheckpoint(eager=True)
             topk = acc.withColumn("knn_rank", F.row_number().over(wnd)).filter(
                 F.col("knn_rank") <= k
             )
-            # guaranteed reach of the searched block: r full cells beyond the
-            # query's own cell. Longitude cells are narrower in km by cos(lat),
-            # so the safe bound uses the lon-direction width (with margin).
-            kth = topk.groupBy(query_id).agg(
-                F.max("dist_km").alias("_kth"),
-                F.count("*").alias("_n"),
-                F.min(F.cos(F.radians(F.col("lat")))).alias("_coslat"),
-            )
-            reach_km = F.lit(r * cell_h_km) * F.col("_coslat") * F.lit(0.99)
-            finished_keys = kth.filter((F.col("_n") >= k) & (F.col("_kth") <= reach_km)).select(
-                query_id
-            )
-            if r == max_rings:  # last ring: everything found is final
-                finished_keys = kth.select(query_id)
-            finished = topk.join(finished_keys, on=query_id, how="inner")
+            if step is None or r == max_rings:
+                finished_keys = topk.select(query_id).distinct()
+            else:
+                kth = radius(topk).groupBy(query_id).agg(
+                    F.max("dist_km").alias("_kth"),
+                    F.count("*").alias("_n"),
+                    F.min("_radius").alias("_radius"),
+                )
+                kth_km = F.when(F.col("_n") >= k, F.col("_kth")).otherwise(F.lit(float("inf")))
+                finished_keys = kth.filter(kth_km <= F.col("_radius")).select(query_id)
             done_parts.append(
-                finished.drop("_qcell").withColumnRenamed("_tid", "neighbor_id")
+                topk.join(finished_keys, on=query_id, how="inner")
+                .withColumnRenamed("_tid", "neighbor_id")
                 .localCheckpoint(eager=True)
             )
             remaining = remaining.join(finished_keys, on=query_id, how="left_anti").localCheckpoint(
                 eager=True
             )
-            if remaining.isEmpty():
+            if step is None or remaining.isEmpty():
                 break
             acc = acc.join(finished_keys, on=query_id, how="left_anti")
     finally:
@@ -343,6 +363,229 @@ def knn_cells(
     for p in done_parts[1:]:
         out = out.unionByName(p)
     return out
+
+
+def knn_cells(
+    queries: DataFrame,
+    targets: DataFrame,
+    k: int = 5,
+    query_id: str = "query_id",
+    target_id: str = "place_id",
+    cells_per_degree: int = 32,
+    max_rings: int = 8,
+    broadcast_max_bytes: int = 800 * 1024 * 1024,
+) -> DataFrame:
+    """Scale-path kNN: grid-cell ring expansion (SURVEY.md J10/W4).
+
+    Ring r is the 8r-cell shell at Chebyshev distance exactly r from the
+    query's cell (not the whole (2r+1)^2 block); columns wrap around the
+    antimeridian. After ring r every target within r full cells of the
+    query's own cell has been scored. Driver loop depth <= max_rings; the
+    loop and the byte gate are ``_knn_rings``.
+    """
+    w = 360 * cells_per_degree
+    q = queries.withColumn("_qcell", grid_cell_col(F.col("lat"), F.col("lon"), cells_per_degree))
+    iy = F.floor(F.col("_qcell") / F.lit(w))
+    ix = F.pmod(F.col("_qcell"), F.lit(w))
+    # cell height in km; longitude cells are narrower by cos(lat), so the
+    # finish radius uses the lon-direction width at the query latitude,
+    # with margin
+    cell_h_km = 111.19492664455873 / cells_per_degree
+
+    def ring(r: int, remaining: DataFrame):
+        offs = F.array(
+            *[
+                F.struct(F.lit(dy).alias("dy"), F.lit(dx).alias("dx"))
+                for dy in range(-r, r + 1)
+                for dx in range(-r, r + 1)
+                if max(abs(dy), abs(dx)) == r  # shell only
+            ]
+        )
+        shell = (
+            remaining.withColumn("_off", F.explode(offs))
+            .withColumn(
+                "_cell",
+                (iy + F.col("_off.dy")) * F.lit(w) + F.pmod(ix + F.col("_off.dx"), F.lit(w)),
+            )
+            .drop("_off")
+        )
+        return shell, lambda topk: topk.withColumn(
+            "_radius", F.lit(r * cell_h_km) * F.cos(F.radians(F.col("lat"))) * F.lit(0.99)
+        )
+
+    return _knn_rings(
+        q, targets, grid_cell_col(F.col("lat"), F.col("lon"), cells_per_degree),
+        k, query_id, target_id, max_rings, broadcast_max_bytes, ring,
+    ).drop("_qcell")
+
+
+def knn_h3(
+    queries: DataFrame,
+    targets: DataFrame,
+    k: int = 5,
+    query_id: str = "query_id",
+    target_id: str = "place_id",
+    res: int = 7,
+    max_rings: int = 8,
+    max_query_cells: int = 50_000,
+    broadcast_max_bytes: int = 800 * 1024 * 1024,
+) -> DataFrame:
+    """kNN via H3 ring expansion (J10/W4 on the real Uber-H3 tiling).
+
+    Ring r is the cells at exactly grid distance r from the query's cell;
+    the loop and the byte gate are ``_knn_rings``. The finish radius is
+    per query cell with a ONE-RING LOOKAHEAD: ring r+1's exact minimum
+    center distance (its shells are driver-computed anyway), plus the
+    calibrated reach table (functions/h3.py ring_finish_reach_km — per-ring
+    minima over the pentagon/seam distortion extremes) for rings >= r+2,
+    minus the target's max center offset and the query point's ACTUAL
+    center offset.
+
+    Scale shape:
+    - ring shells are built LAZILY per ring from the still-active query
+      cells only (one batched BFS step each ring, memoized), never the
+      full disk table up front;
+    - ``max_query_cells`` bounds the driver-side BFS: the search runs at
+      the finest resolution at or below ``res`` whose distinct query-cell
+      count fits (correct at any res — only ring membership changes, the
+      distance math is identical), and raises ValueError if not even
+      res 0 fits.
+    """
+    from ..functions.h3 import cell_to_latlng, grid_neighbors, h3_cell_col, ring_finish_reach_km
+
+    if max_rings < 1 or max_rings > 15:
+        raise ValueError("knn_h3: max_rings must be in 1..15")
+
+    for res in range(res, -1, -1):
+        q = queries.withColumn("_qcell", h3_cell_col(F.col("lat"), F.col("lon"), res))
+        qcells = [
+            r[0]
+            for r in q.select("_qcell").distinct().limit(max_query_cells + 1).collect()
+        ]
+        if len(qcells) <= max_query_cells:
+            break
+    else:
+        raise ValueError("knn_h3: query cells exceed the cap even at res 0")
+
+    spark = queries.sparkSession
+    suffix_d, r_max = ring_finish_reach_km(res, max_ring=max_rings + 1)
+
+    # query-cell centers: the finish bound uses each query point's ACTUAL
+    # offset from its cell center (driver-computed once; the query side is
+    # the small side by contract)
+    qarr = np.array(qcells, dtype=np.uint64)
+    qla, qlo = cell_to_latlng(qarr)
+    qcenters = spark.createDataFrame(
+        pd.DataFrame({"_qcell": qarr.astype(np.int64), "_qclat": qla, "_qclng": qlo}),
+        "_qcell long, _qclat double, _qclng double",
+    )
+    q = q.join(F.broadcast(qcenters), on="_qcell", how="left").withColumn(
+        "_qoff", haversine_col(F.col("lat"), F.col("lon"), F.col("_qclat"), F.col("_qclng"))
+    ).drop("_qclat", "_qclng")
+
+    # per-query-cell BFS state for lazy shells; centers memoized across
+    # rings (ring cells recur across nearby query cells)
+    seen: dict[int, set[int]] = {int(c): {int(c)} for c in qcells}
+    qcenter = {int(c): (float(a), float(b)) for c, a, b in zip(qarr, qla, qlo)}
+    center_cache: dict[int, tuple[float, float]] = dict(qcenter)
+
+    def _centers_of(cells_set: set[int]) -> None:
+        todo = sorted(cells_set - center_cache.keys())
+        if todo:
+            ta = np.array(todo, dtype=np.uint64)
+            tla, tlo = cell_to_latlng(ta)
+            center_cache.update(
+                (int(c), (float(a), float(b))) for c, a, b in zip(todo, tla, tlo)
+            )
+
+    def _bfs_step(cur: dict[int, set[int]]) -> dict[int, set[int]]:
+        flat = sorted({s for c, sh in cur.items() if sh for s in sh})
+        if not flat:
+            return {c: set() for c in cur}
+        neigh = grid_neighbors(np.array(flat, dtype=np.uint64))
+        out = {}
+        for c, sh in cur.items():
+            nxt = set()
+            for s in sh:
+                nxt |= neigh[s]
+            nxt -= seen[c]
+            seen[c] |= nxt
+            out[c] = nxt
+        return out
+
+    def _hav_np(a, b):
+        (la1, lo1), (la2, lo2) = a, b
+        r1, r2 = np.radians(la1), np.radians(la2)
+        dla = np.radians(la2 - la1)
+        dlo = np.radians(lo2 - lo1)
+        h_ = np.sin(dla / 2) ** 2 + np.cos(r1) * np.cos(r2) * np.sin(dlo / 2) ** 2
+        return 2 * 6371.0088 * float(np.arcsin(np.sqrt(min(max(h_, 0.0), 1.0))))
+
+    shells: dict[int, set[int]] = {int(c): {int(c)} for c in qcells}
+    next_shells: dict[int, set[int]] = {}
+
+    def ring(r: int, remaining: DataFrame):
+        nonlocal shells, next_shells
+        if r > 0:
+            # prune the BFS to cells some unfinished query still needs — one
+            # small collect on the (checkpointed, capped) query side saves
+            # the driver-side neighbor expansion for finished regions
+            live = {row[0] for row in remaining.select("_qcell").distinct().collect()}
+            shells = {c: s for c, s in next_shells.items() if c in live}
+        active = [c for c in shells if shells[c]]
+        rows = [(int(c), int(s)) for c in active for s in shells[c]]
+        if not rows and r > 0:  # every active query searched the sphere
+            return None
+        # ONE-RING LOOKAHEAD for the finish radius: ring r+1's shells are
+        # computed now, so the radius can use each query cell's EXACT
+        # minimum center distance to its next ring (local grid spacing —
+        # typically ~1.7x the pentagon-depressed global minimum), with
+        # the global suffix table covering rings >= r+2 only.
+        local_rows = []
+        if r < max_rings:
+            next_shells = _bfs_step(shells)
+            want = set()
+            for c in active:
+                want |= next_shells.get(c, set())
+            _centers_of(want)
+            for c in active:
+                nxt = next_shells.get(c, set())
+                if nxt:
+                    lm = min(_hav_np(qcenter[c], center_cache[s]) for s in nxt)
+                    local_rows.append((int(c), lm * 0.999, False))  # float margin
+                else:
+                    # BFS exhausted for this cell: disk r covers every
+                    # reachable cell, so NOTHING is unsearched — the
+                    # query is final with whatever it found
+                    local_rows.append((int(c), 0.0, True))
+        ring_map = spark.createDataFrame(
+            pd.DataFrame(rows, columns=["_qcell", "_cell"]), "_qcell long, _cell long"
+        )
+        local_bounds = spark.createDataFrame(
+            pd.DataFrame(local_rows, columns=["_qcell", "_local", "_exh"]),
+            "_qcell long, _local double, _exh boolean",
+        )
+        # any unsearched target sits either in ring r+1 (exact local
+        # minimum center distance, computed above) or at grid distance
+        # >= r+2 (global suffix table); both net the target's max center
+        # offset and the query point's ACTUAL center offset
+        glob_next = float(suffix_d[r + 1]) if r + 1 < len(suffix_d) else float(suffix_d[-1])
+        center_km = F.least(F.coalesce(F.col("_local"), F.lit(float("inf"))), F.lit(glob_next))
+
+        def radius(topk: DataFrame) -> DataFrame:
+            return topk.join(F.broadcast(local_bounds), on="_qcell", how="left").withColumn(
+                "_radius",
+                F.when(F.col("_exh"), F.lit(float("inf"))).otherwise(
+                    center_km - F.lit(float(r_max)) - F.col("_qoff")
+                ),
+            )
+
+        return remaining.join(F.broadcast(ring_map), on="_qcell", how="inner"), radius
+
+    return _knn_rings(
+        q, targets, h3_cell_col(F.col("lat"), F.col("lon"), res),
+        k, query_id, target_id, max_rings, broadcast_max_bytes, ring,
+    ).drop("_qcell", "_qoff")
 
 
 # ---------------------------------------------------------------------------
@@ -401,295 +644,6 @@ def tile_rollup_approx(
         F.count(F.lit(1)).alias("n"),
         F.approx_count_distinct(distinct_col, rsd).alias(f"approx_{distinct_col}"),
     )
-
-
-def _knn_target_join(shell_df: DataFrame, t: DataFrame, no_bc: bool) -> DataFrame:
-    """One ring's candidate join: broadcast under the byte gate, shuffle
-    hash join on the cell key above it (both sides hash-partition on
-    ``_cell``; the plan must contain no BroadcastExchange in that
-    regime — asserted by test_plan_shape)."""
-    if no_bc:
-        j = shell_df.hint("shuffle_hash").join(t, F.col("_cell") == t._tcell, "inner")
-    else:
-        j = shell_df.join(F.broadcast(t), F.col("_cell") == t._tcell, "inner")
-    return j.withColumn(
-        "dist_km",
-        F.round(
-            haversine_col(F.col("lat"), F.col("lon"), F.col("_tlat"), F.col("_tlon")),
-            9,
-        ),
-    ).drop("_cell", "_tcell", "_tlat", "_tlon")
-
-
-def _targets_too_big_to_broadcast(
-    t: DataFrame, broadcast_max_bytes: int, force_no_broadcast: bool
-) -> bool:
-    """The cascade's byte gate (geocode.py build_gazetteer_index), reused
-    for kNN target tables: estimate serialized bytes from a sampled row
-    width x count and refuse to broadcast above the budget — a
-    planet-scale POI corpus must degrade to a shuffle join on the cell
-    key, not OOM the executors."""
-    if force_no_broadcast:
-        return True
-    from .geocode import _avg_row_bytes
-
-    n = t.count()
-    return n * _avg_row_bytes(t) > broadcast_max_bytes
-
-
-def knn_h3(
-    queries: DataFrame,
-    targets: DataFrame,
-    k: int = 5,
-    query_id: str = "query_id",
-    target_id: str = "place_id",
-    res: int = 7,
-    max_rings: int = 8,
-    max_query_cells: int = 50_000,
-    broadcast_max_bytes: int = 800 * 1024 * 1024,
-    force_no_broadcast: bool = False,
-    on_overflow: str = "coarsen",
-) -> DataFrame:
-    """kNN via H3 ring expansion (J10/W4 on the real Uber-H3 tiling).
-
-    Same incremental-shell contract as ``knn_cells``: ring r joins only
-    the cells at exactly grid distance r, candidates accumulate, and a
-    query finishes once its k-th neighbor is provably closer than any
-    point in an unsearched cell. The finish bound is per query cell
-    with a ONE-RING LOOKAHEAD: ring r+1's exact minimum center distance
-    (its shells are driver-computed anyway), plus the calibrated reach
-    table (functions/h3.py ring_finish_reach_km — per-ring minima over
-    the pentagon/seam distortion extremes) for rings >= r+2, minus the
-    target's max center offset and the query point's ACTUAL center
-    offset. Replaces the round-3 ``r * min_spacing`` bound that was
-    unsound for hex grid distance (zigzag centers).
-
-    Scale shape:
-    - ring shells are built LAZILY per ring from the still-active query
-      cells only (one batched BFS step each ring, memoized), never the
-      full disk table up front;
-    - the target projection broadcasts only under the byte gate
-      (``broadcast_max_bytes``, same estimator as the geocode cascade);
-      above it the per-ring join degrades to a shuffle hash join on the
-      cell key — both sides hash-partition on ``_cell``, nothing OOMs;
-    - ``max_query_cells`` bounds the driver-side BFS. Above it,
-      ``on_overflow='coarsen'`` re-runs at the finest resolution below
-      the input whose distinct-cell count fits (correct at any res —
-      only ring membership changes, the distance math is identical);
-      ``'raise'`` keeps the round-3 hard error.
-    """
-    from ..functions.h3 import grid_rings, h3_cell_col, ring_finish_reach_km
-    from ..functions.h3 import cell_to_latlng, grid_neighbors
-
-    if max_rings < 1 or max_rings > 15:
-        raise ValueError("knn_h3: max_rings must be in 1..15")
-
-    q = queries.withColumn("_qcell", h3_cell_col(F.col("lat"), F.col("lon"), res))
-    qcells = [
-        r[0]
-        for r in q.select("_qcell").distinct().limit(max_query_cells + 1).collect()
-    ]
-    if len(qcells) > max_query_cells:
-        if on_overflow != "coarsen":
-            raise ValueError(
-                f"knn_h3: > {max_query_cells} distinct query cells; use a "
-                "coarser res, knn_cells, or on_overflow='coarsen'"
-            )
-        for coarser in range(res - 1, -1, -1):
-            qc = queries.withColumn(
-                "_qcell", h3_cell_col(F.col("lat"), F.col("lon"), coarser)
-            )
-            n = qc.select("_qcell").distinct().limit(max_query_cells + 1).count()
-            if n <= max_query_cells:
-                return knn_h3(
-                    queries, targets, k, query_id, target_id, coarser,
-                    max_rings, max_query_cells, broadcast_max_bytes,
-                    force_no_broadcast, on_overflow="raise",
-                )
-        raise ValueError("knn_h3: query cells exceed the cap even at res 0")
-
-    # cache the NARROW target projection (id, lat, lon, cell — ~32 B/row,
-    # spillable): every ring is a separate action, so an uncached t would
-    # re-scan the corpus and re-run the cell-tagging UDF per ring
-    t = targets.select(
-        F.col(target_id).alias("_tid"),
-        F.col("lat").alias("_tlat"),
-        F.col("lon").alias("_tlon"),
-        h3_cell_col(F.col("lat"), F.col("lon"), res).alias("_tcell"),
-    ).cache()
-    spark = queries.sparkSession
-    no_bc = _targets_too_big_to_broadcast(
-        t, broadcast_max_bytes, force_no_broadcast
-    )
-
-    suffix_d, r_max = ring_finish_reach_km(res, max_ring=max_rings + 1)
-
-    # query-cell centers: the finish bound uses each query point's ACTUAL
-    # offset from its cell center (driver-computed once; the query side is
-    # the small side by contract)
-    qarr = np.array(qcells, dtype=np.uint64) if qcells else np.array([], dtype=np.uint64)
-    if len(qarr):
-        qla, qlo = cell_to_latlng(qarr)
-        qcenters = spark.createDataFrame(
-            pd.DataFrame(
-                {"_qcell": qarr.astype(np.int64), "_qclat": qla, "_qclng": qlo}
-            )
-        )
-    else:
-        qcenters = spark.createDataFrame([], "_qcell long, _qclat double, _qclng double")
-    q = q.join(F.broadcast(qcenters), on="_qcell", how="left").withColumn(
-        "_qoff", haversine_col(F.col("lat"), F.col("lon"), F.col("_qclat"), F.col("_qclng"))
-    ).drop("_qclat", "_qclng")
-
-    # per-query-cell BFS state for lazy shells; centers memoized across
-    # rings (ring cells recur across nearby query cells)
-    seen: dict[int, set[int]] = {int(c): {int(c)} for c in qcells}
-    qcenter: dict[int, tuple[float, float]] = (
-        {int(c): (float(a), float(b)) for c, a, b in zip(qarr, qla, qlo)}
-        if len(qarr)
-        else {}
-    )
-    center_cache: dict[int, tuple[float, float]] = dict(qcenter)
-
-    def _centers_of(cells_set: set[int]) -> None:
-        todo = sorted(cells_set - center_cache.keys())
-        if todo:
-            ta = np.array(todo, dtype=np.uint64)
-            tla, tlo = cell_to_latlng(ta)
-            center_cache.update(
-                (int(c), (float(a), float(b))) for c, a, b in zip(todo, tla, tlo)
-            )
-
-    def _bfs_step(cur: dict[int, set[int]]) -> dict[int, set[int]]:
-        flat = sorted({s for c, sh in cur.items() if sh for s in sh})
-        if not flat:
-            return {c: set() for c in cur}
-        neigh = grid_neighbors(np.array(flat, dtype=np.uint64))
-        out = {}
-        for c, sh in cur.items():
-            nxt = set()
-            for s in sh:
-                nxt |= neigh[s]
-            nxt -= seen[c]
-            seen[c] |= nxt
-            out[c] = nxt
-        return out
-
-    def _hav_np(a, b):
-        (la1, lo1), (la2, lo2) = a, b
-        r1, r2 = np.radians(la1), np.radians(la2)
-        dla = np.radians(la2 - la1)
-        dlo = np.radians(lo2 - lo1)
-        h_ = np.sin(dla / 2) ** 2 + np.cos(r1) * np.cos(r2) * np.sin(dlo / 2) ** 2
-        return 2 * 6371.0088 * float(np.arcsin(np.sqrt(min(max(h_, 0.0), 1.0))))
-
-    shells: dict[int, set[int]] = {int(c): {int(c)} for c in qcells}
-    remaining = q
-    acc: DataFrame | None = None
-    done_parts: list[DataFrame] = []
-    empty_shell = spark.createDataFrame([], "_qcell long, _cell long")
-    empty_bounds = spark.createDataFrame([], "_qcell long, _local double, _exh boolean")
-    try:
-        for r in range(max_rings + 1):
-            active = [c for c in shells if shells[c]]
-            rows = [(int(c), int(s)) for c in active for s in shells[c]]
-            exhausted = not rows and r > 0  # every active query searched the sphere
-            ring_map = (
-                spark.createDataFrame(pd.DataFrame(rows, columns=["_qcell", "_cell"]))
-                if rows
-                else empty_shell
-            )
-            # ONE-RING LOOKAHEAD for the finish bound: ring r+1's shells are
-            # computed now, so the bound can use each query cell's EXACT
-            # minimum center distance to its next ring (local grid spacing —
-            # typically ~1.7x the pentagon-depressed global minimum), with
-            # the global suffix table covering rings >= r+2 only.
-            next_shells = _bfs_step(shells)
-            local_rows = []
-            if r < max_rings:
-                want = set()
-                for c in active:
-                    want |= next_shells.get(c, set())
-                _centers_of(want)
-                for c in active:
-                    nxt = next_shells.get(c, set())
-                    if nxt:
-                        lm = min(_hav_np(qcenter[c], center_cache[s]) for s in nxt)
-                        local_rows.append((int(c), lm * 0.999, False))  # float margin
-                    else:
-                        # BFS exhausted for this cell: disk r covers every
-                        # reachable cell, so NOTHING is unsearched — the
-                        # query is final with whatever it found
-                        local_rows.append((int(c), 0.0, True))
-            local_bounds = (
-                spark.createDataFrame(
-                    pd.DataFrame(local_rows, columns=["_qcell", "_local", "_exh"])
-                )
-                if local_rows
-                else empty_bounds
-            )
-
-            shell_df = remaining.join(F.broadcast(ring_map), on="_qcell", how="inner")
-            shell_df = _knn_target_join(shell_df, t, no_bc)
-            acc = shell_df if acc is None else acc.unionByName(shell_df)
-            acc = acc.localCheckpoint(eager=True)
-
-            wnd = Window.partitionBy(query_id).orderBy(
-                F.col("dist_km").asc(), F.col("_tid").asc()
-            )
-            topk = acc.withColumn("knn_rank", F.row_number().over(wnd)).filter(
-                F.col("knn_rank") <= k
-            )
-            kth = topk.groupBy(query_id).agg(
-                F.max("dist_km").alias("_kth"),
-                F.count("*").alias("_n"),
-                F.max("_qoff").alias("_qo"),
-                F.max("_qcell").alias("_qc"),
-            )
-            # any unsearched target sits either in ring r+1 (exact local
-            # minimum center distance, computed above) or at grid distance
-            # >= r+2 (global suffix table); both net the target's max center
-            # offset and the query point's ACTUAL center offset
-            glob_next = float(suffix_d[r + 1]) if r + 1 < len(suffix_d) else float(suffix_d[-1])
-            kth = kth.join(
-                F.broadcast(local_bounds), kth._qc == local_bounds._qcell, "left"
-            )
-            bound_center = F.least(
-                F.coalesce(F.col("_local"), F.lit(float("inf"))), F.lit(glob_next)
-            )
-            finish_km = bound_center - F.lit(float(r_max)) - F.col("_qo")
-            finished_keys = kth.filter(
-                F.coalesce(F.col("_exh"), F.lit(False))
-                | ((F.col("_n") >= k) & (F.col("_kth") <= finish_km))
-            ).select(query_id)
-            if r == max_rings or exhausted:
-                finished_keys = kth.select(query_id)
-            finished = topk.join(finished_keys, on=query_id, how="inner")
-            done_parts.append(
-                finished.drop("_qcell", "_qoff")
-                .withColumnRenamed("_tid", "neighbor_id")
-                .localCheckpoint(eager=True)
-            )
-            remaining = remaining.join(
-                finished_keys, on=query_id, how="left_anti"
-            ).localCheckpoint(eager=True)
-            if exhausted or remaining.isEmpty():
-                break
-            acc = acc.join(finished_keys, on=query_id, how="left_anti")
-            # prune the BFS to cells some unfinished query still needs — one
-            # small collect on the (checkpointed, capped) query side saves
-            # the driver-side neighbor expansion for finished regions
-            live = {row[0] for row in remaining.select("_qcell").distinct().collect()}
-            shells = {c: s for c, s in next_shells.items() if c in live}
-    finally:
-        # done_parts are checkpointed; drop the cached target
-        # projection so repeated kNN calls do not accrete storage
-        t.unpersist(blocking=True)
-
-    out = done_parts[0]
-    for p_ in done_parts[1:]:
-        out = out.unionByName(p_)
-    return out
 
 
 def multi_zoom_rollup(

@@ -135,38 +135,50 @@ def test_pip_edge_cases(spark):
     assert left[left.pid == 5].poly_id.notna().all()  # float-edge point kept
 
 
-def test_knn_cells_matches_bruteforce(spark, world):
+def _antimeridian_case(spark):
+    """Nearest target across the antimeridian: target 10 is one row below
+    and one column to the east of the query's cell, where the east column
+    wraps to 0 (0.31 km away); target 20 shares the query's cell but is
+    1.0 km away."""
+    queries = spark.createDataFrame(
+        pd.DataFrame(dict(query_id=[1], lat=[0.001], lon=[179.999]))
+    )
+    targets = spark.createDataFrame(
+        pd.DataFrame(dict(place_id=[10, 20], lat=[-0.001, 0.001], lon=[-179.999, 179.99]))
+    )
+    return queries, targets, 1
+
+
+def _world_case(spark, world):
     gaz = spark.read.parquet(f"{world['_dir']}/gazetteer.parquet")
     targets = gaz.filter(F.col("place_rank") == 30).select("place_id", "lat", "lon")
     qpdf = world["gazetteer"][world["gazetteer"].place_rank == 26].head(40)[
         ["place_id", "lat", "lon"]
     ].rename(columns={"place_id": "query_id"})
-    queries = spark.createDataFrame(qpdf)
-
-    bf = knn_bruteforce(queries, targets, k=3).select("query_id", "neighbor_id", "knn_rank").toPandas()
-    cc = knn_cells(queries, targets, k=3).select("query_id", "neighbor_id", "knn_rank").toPandas()
-    bf = bf.sort_values(["query_id", "knn_rank"]).reset_index(drop=True)
-    cc = cc.sort_values(["query_id", "knn_rank"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(bf, cc)
+    return spark.createDataFrame(qpdf), targets, 3
 
 
-def test_knn_h3_matches_bruteforce(spark, world):
-    """J10 on the real Uber-H3 tiling: ring expansion over grid_disk
-    shells equals exact brute force."""
-    from nominatimwrapper_spark.operators.spatial import knn_h3
+@pytest.mark.parametrize("case", ["world", "antimeridian"])
+@pytest.mark.parametrize("fn", ["knn_cells", "knn_h3"])
+def test_knn_matches_bruteforce(spark, world, fn, case):
+    """J10: ring expansion over planar grid cells and over H3 grid_disk
+    shells both equal exact brute force."""
+    from nominatimwrapper_spark.operators import spatial
 
-    gaz = spark.read.parquet(f"{world['_dir']}/gazetteer.parquet")
-    targets = gaz.filter(F.col("place_rank") == 30).select("place_id", "lat", "lon")
-    qpdf = world["gazetteer"][world["gazetteer"].place_rank == 26].head(40)[
-        ["place_id", "lat", "lon"]
-    ].rename(columns={"place_id": "query_id"})
-    queries = spark.createDataFrame(qpdf)
-
-    bf = knn_bruteforce(queries, targets, k=3).select("query_id", "neighbor_id", "knn_rank").toPandas()
-    h3r = knn_h3(queries, targets, k=3, res=7).select("query_id", "neighbor_id", "knn_rank").toPandas()
-    bf = bf.sort_values(["query_id", "knn_rank"]).reset_index(drop=True)
-    h3r = h3r.sort_values(["query_id", "knn_rank"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(bf, h3r)
+    if case == "world":
+        queries, targets, k = _world_case(spark, world)
+    else:
+        queries, targets, k = _antimeridian_case(spark)
+    bf = knn_bruteforce(queries, targets, k=k).select(
+        "query_id", "neighbor_id", "knn_rank", "dist_km"
+    ).toPandas()
+    got = getattr(spatial, fn)(queries, targets, k=k).select(
+        "query_id", "neighbor_id", "knn_rank", "dist_km"
+    ).toPandas()
+    pd.testing.assert_frame_equal(
+        bf.sort_values(["query_id", "knn_rank"]).reset_index(drop=True),
+        got.sort_values(["query_id", "knn_rank"]).reset_index(drop=True),
+    )
 
 
 def test_tile_rollup_approx_within_error(spark, world):
@@ -254,14 +266,14 @@ def test_knn_h3_shuffle_regime_matches_bruteforce(spark, world):
     queries = spark.createDataFrame(qpdf)
 
     bf = knn_bruteforce(queries, targets, k=3).select("query_id", "neighbor_id", "knn_rank").toPandas()
-    nb = knn_h3(queries, targets, k=3, res=7, force_no_broadcast=True).select(
+    nb = knn_h3(queries, targets, k=3, res=7, broadcast_max_bytes=0).select(
         "query_id", "neighbor_id", "knn_rank"
     ).toPandas()
     pd.testing.assert_frame_equal(
         bf.sort_values(["query_id", "knn_rank"]).reset_index(drop=True),
         nb.sort_values(["query_id", "knn_rank"]).reset_index(drop=True),
     )
-    cc = knn_cells(queries, targets, k=3, force_no_broadcast=True).select(
+    cc = knn_cells(queries, targets, k=3, broadcast_max_bytes=0).select(
         "query_id", "neighbor_id", "knn_rank"
     ).toPandas()
     pd.testing.assert_frame_equal(
@@ -308,7 +320,7 @@ def test_knn_h3_coarsens_above_query_cell_cap(spark, world):
         got.sort_values(["query_id", "knn_rank"]).reset_index(drop=True),
     )
     with pytest.raises(ValueError, match="query cells"):
-        knn_h3(queries, targets, k=3, res=7, max_query_cells=5, on_overflow="raise")
+        knn_h3(queries, targets, k=3, res=7, max_query_cells=0)
 
 
 def test_pip_h3_cover_truth_table(spark):
