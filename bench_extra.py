@@ -129,7 +129,7 @@ def main() -> None:
 
     elif which == "lifecycle":
         # mirrors bench.py's checkpoint/streaming section so the job legs
-        # can be isolated + A/B'd (e.g. NWSPARK_JOB_CONCURRENCY)
+        # can be isolated + A/B'd
         import glob as _glob
         import shutil as _shutil
         import tempfile as _tempfile

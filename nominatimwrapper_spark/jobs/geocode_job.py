@@ -41,8 +41,18 @@ if __package__ in (None, ""):  # file run directly (spark-submit / python file.p
     )
 
 from nominatimwrapper_spark.operators.geocode import build_gazetteer_index
+from nominatimwrapper_spark.operators.spatial import latest_snapshot
+from nominatimwrapper_spark.plans.flagship import geocode_pages
 from nominatimwrapper_spark.sources.checkpoint import PartitionedCheckpointer
-from nominatimwrapper_spark.sources.pages_io import read_pages
+
+# partition jobs run side by side from a driver thread pool (guide §2.6:
+# enough to back-fill each job's tail, not enough to thrash; measured on
+# the 8-partition bench layout: 4-part leg 13.7s at 1 -> 10.0s at 3,
+# resume leg 11.8s -> 8.8s)
+_CONCURRENCY = 3
+
+# the directory write_pages_partitioned gives pages with a null warc_ts
+_NULL_DATE = "__HIVE_DEFAULT_PARTITION__"
 
 
 def list_crawl_dates(pages_path: str) -> list[str]:
@@ -55,47 +65,35 @@ def list_crawl_dates(pages_path: str) -> list[str]:
     )
 
 
-def _dir_files_digest(h, d: str) -> None:
-    for f in sorted(os.listdir(d)):
-        fp = os.path.join(d, f)
-        h.update(f.encode())
-        if os.path.isfile(fp):
-            h.update(str(os.path.getsize(fp)).encode())
+def _files_signature(path: str) -> bytes:
+    """(name, size) of every file in a dir — or the size of one file — as
+    the bytes the input fingerprints hash."""
+    if os.path.isdir(path):
+        sig = b""
+        for f in sorted(os.listdir(path)):
+            fp = os.path.join(path, f)
+            sig += f.encode()
+            if os.path.isfile(fp):
+                sig += str(os.path.getsize(fp)).encode()
+        return sig
+    if os.path.exists(path):
+        return str(os.path.getsize(path)).encode()
+    return b""
 
 
-def partition_fingerprint(pages_path: str, part: str, gazetteer_path: str) -> str:
+def _digest(sig: bytes) -> str:
+    return hashlib.sha256(sig).hexdigest()[:16]
+
+
+def partition_fingerprint(pages_path: str, part: str, gazetteer_sig: bytes) -> str:
     """Cheap input fingerprint: hash of (name, size) of every data file in
-    the partition dir AND of the gazetteer — the gazetteer is an input to
-    the computation too, so a refreshed OSM extract invalidates every
-    partition's checkpoint instead of silently serving stale geocodes."""
-    h = hashlib.sha256()
-    _dir_files_digest(h, os.path.join(pages_path, f"crawl_date={part}"))
-    if os.path.isdir(gazetteer_path):
-        _dir_files_digest(h, gazetteer_path)
-    elif os.path.exists(gazetteer_path):
-        h.update(str(os.path.getsize(gazetteer_path)).encode())
-    return h.hexdigest()[:16]
-
-
-def geocode_partition(spark: SparkSession, pages_path: str, part: str, index):
-    """One partition end-to-end: read (partition-pruned) -> recrawl dedup
-    -> extract -> cascade -> S2 level-13 cells. Real crawl input: recrawl
-    dedup stays ON. A broadcast-able gazetteer runs the partition-local
-    kernel (recrawl dedup composed upstream as the distributed as-of
-    window; addr_key is unique by construction after it, so the duplicate
-    guard is satisfied structurally); a planet-scale gazetteer falls back
-    to the distributed shuffle-join cascade with the guard on."""
-    pages = read_pages(spark, pages_path, date_from=part, date_to=part)
-    if index.broadcast_ok:
-        from nominatimwrapper_spark.operators.geocode_kernel import (
-            geocode_and_tile_kernel,
-        )
-        from nominatimwrapper_spark.operators.spatial import latest_snapshot
-
-        return geocode_and_tile_kernel(latest_snapshot(pages, "url", "warc_ts"), index)
-    from nominatimwrapper_spark.plans.flagship import geocode_and_tile
-
-    return geocode_and_tile(pages, index)
+    the partition dir AND of the gazetteer (``gazetteer_sig``, its
+    ``_files_signature``) — the gazetteer is an input to the computation
+    too, so a refreshed OSM extract invalidates every partition's
+    checkpoint instead of silently serving stale geocodes."""
+    return _digest(
+        _files_signature(os.path.join(pages_path, f"crawl_date={part}")) + gazetteer_sig
+    )
 
 
 # derived gazetteer index per (session, gazetteer content fingerprint) —
@@ -106,13 +104,8 @@ def geocode_partition(spark: SparkSession, pages_path: str, part: str, index):
 _INDEX_CACHE: dict[tuple, object] = {}
 
 
-def _gazetteer_index_cached(spark: SparkSession, gazetteer_path: str):
-    h = hashlib.sha256()
-    if os.path.isdir(gazetteer_path):
-        _dir_files_digest(h, gazetteer_path)
-    elif os.path.exists(gazetteer_path):
-        h.update(str(os.path.getsize(gazetteer_path)).encode())
-    key = (id(spark), os.path.abspath(gazetteer_path), h.hexdigest()[:16])
+def _gazetteer_index_cached(spark: SparkSession, gazetteer_path: str, gazetteer_sig: bytes):
+    key = (id(spark), os.path.abspath(gazetteer_path), _digest(gazetteer_sig))
     if key not in _INDEX_CACHE:
         _INDEX_CACHE[key] = build_gazetteer_index(spark.read.parquet(gazetteer_path))
     return _INDEX_CACHE[key]
@@ -125,30 +118,34 @@ def run_job(
     out_dir: str,
     date_from: str | None = None,
     date_to: str | None = None,
-    max_concurrent: int | None = None,
 ) -> dict:
     """Run (or resume) the job; returns {partition: manifest}.
 
-    ``max_concurrent`` partition jobs run side by side from a driver
-    thread pool (default from $NWSPARK_JOB_CONCURRENCY, else 3 — guide
-    §2.6: enough to back-fill each job's tail, not enough to thrash;
-    measured on the 8-partition bench layout: 4-part leg 13.7s at 1 ->
-    10.0s at 3, resume leg 11.8s -> 8.8s)."""
-    if max_concurrent is None:
-        max_concurrent = int(os.environ.get("NWSPARK_JOB_CONCURRENCY", "3"))
-    index = _gazetteer_index_cached(spark, gazetteer_path)
+    Each partition is read through its own directory, recrawl-deduplicated
+    (latest crawl per url wins) and geocoded by geocode_pages. Pages with a
+    null warc_ts form their own partition, selected only when no date
+    bound is given."""
+    gazetteer_sig = _files_signature(gazetteer_path)
+    index = _gazetteer_index_cached(spark, gazetteer_path, gazetteer_sig)
+    bounded = date_from is not None or date_to is not None
     parts = [
         p for p in list_crawl_dates(pages_path)
-        if (date_from is None or p >= date_from)
+        if not (bounded and p == _NULL_DATE)
+        and (date_from is None or p >= date_from)
         and (date_to is None or p <= date_to)
     ]
+
+    def compute(part: str):
+        pages = spark.read.option("basePath", pages_path).parquet(
+            os.path.join(pages_path, f"crawl_date={part}")
+        )
+        return geocode_pages(latest_snapshot(pages, "url", "warc_ts"), index)
+
     ck = PartitionedCheckpointer(out_dir)
     return ck.run(
         parts,
-        compute=lambda p: geocode_partition(spark, pages_path, p, index),
-        input_fingerprint=lambda p: partition_fingerprint(
-            pages_path, p, gazetteer_path
-        ),
+        compute=compute,
+        input_fingerprint=lambda p: partition_fingerprint(pages_path, p, gazetteer_sig),
         # the checkpointer hands this the WRITTEN parquet read back — a
         # cheap columnar scan, never a re-execution of the geocode plan
         stats=lambda df: {
@@ -157,7 +154,7 @@ def run_job(
                 for r in df.groupBy("method").agg(F.count("*").alias("n")).collect()
             }
         },
-        max_concurrent=max_concurrent,
+        max_concurrent=_CONCURRENCY,
     )
 
 

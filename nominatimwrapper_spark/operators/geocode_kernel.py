@@ -22,8 +22,8 @@ addresses) to run the ENTIRE lifecycle partition-locally:
 One job, one narrow stage, zero shuffles, no driver round-trips. The
 gazetteer rides along as a SparkContext broadcast of pandas frames —
 valid under exactly the same condition as the broadcast-join cascade
-(index.broadcast_ok); above the budget callers must use the distributed
-cascade.
+(index.broadcast_ok); above the budget plans/flagship.geocode_pages routes
+to the distributed cascade instead.
 
 Semantics are the distributed cascade's, value-for-value (asserted by
 tests/test_geocode_kernel.py over every fixture class): the only
@@ -691,26 +691,21 @@ def _tile_pdf(res: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def geocode_and_tile_kernel(
-    pages: DataFrame, index: GazetteerIndex, check_results: bool = True,
-    widen: bool = True,
-) -> DataFrame:
+def geocode_and_tile_kernel(pages: DataFrame, index: GazetteerIndex) -> DataFrame:
     """pages -> extract -> cascade -> S2/H3 tiles, entirely inside ONE
     mapInPandas stage (plans/flagship.geocode_and_tile's output schema,
-    value-for-value). Recrawl dedup is the caller's job (streaming state
+    value-for-value). The route plans/flagship.geocode_pages takes under
+    the broadcast gate; recrawl dedup is the caller's job (streaming state
     op upstream, or spatial.latest_snapshot for batch inputs).
 
     Scale shape: zero shuffles, zero driver actions; parallelism = input
-    partitions (small inputs are widened to the cluster's core count —
-    the repartition moves at most one micro-batch of pages).
-
-    ``widen=False`` skips the widening (it needs an RDD partition-count
-    peek, illegal on a STREAMING DataFrame) — streaming callers already
-    arrive shuffled to the session's shuffle width by the upstream dedup
-    state op, which is the right micro-batch granularity."""
+    partitions. Small batch inputs are widened to the cluster's core count
+    (the repartition moves at most one micro-batch of pages); a streaming
+    input is not — it arrives shuffled to the session's shuffle width by
+    the upstream dedup state op."""
     spark = pages.sparkSession
     bc = kernel_broadcast(spark, index)
-    if widen:
+    if not pages.isStreaming:
         par = spark.sparkContext.defaultParallelism
         if pages.rdd.getNumPartitions() < par:
             pages = pages.repartition(par)
@@ -723,7 +718,7 @@ def geocode_and_tile_kernel(
             addr = _extract_addrs_pdf(pdf)
             if not len(addr):
                 continue
-            res = cascade_kernel(addr, pay, check_results=check_results)
+            res = cascade_kernel(addr, pay)
             if len(res):
                 yield _tile_pdf(res)
 

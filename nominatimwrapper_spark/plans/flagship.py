@@ -11,6 +11,11 @@ gazetteer), then runs the full engine lifecycle:
 Page construction and text extraction are distributed Column ops/pandas
 UDFs — the only driver-side piece is the (small, broadcastable) synthetic
 gazetteer.
+
+``geocode_pages`` is the one pages -> tiles entry point behind the
+partitioned job and the stream: it picks the partition-local kernel or
+the distributed cascade (``geocode_and_tile``) by the gazetteer's
+broadcast gate.
 """
 
 from __future__ import annotations
@@ -31,6 +36,7 @@ from ..operators.dedup import (
     simhash_udf,
 )
 from ..operators.geocode import GazetteerIndex, build_gazetteer_index, cascade
+from ..operators.geocode_kernel import geocode_and_tile_kernel
 from ..operators.pages import pages_to_addresses
 from ..operators.spatial import tile_rollup
 
@@ -147,21 +153,17 @@ def flagship_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _FLAGSHIP_CACHE[key]
 
 
-def geocode_and_tile(
-    pages: DataFrame,
-    index,
-    dedup_crawls: bool = True,
-    validate_unique: bool = True,
-    check_results: bool = True,
-) -> DataFrame:
-    """pages -> extract -> cascade -> S2 level-13 cells: the ONE shared
-    batch core behind flagship(), jobs/geocode_job.geocode_partition and
-    streaming/geocode_stream.geocode_micro_batch — a schema or flag change
-    lands in every entry point at once."""
-    addrs = pages_to_addresses(pages, dedup_crawls=dedup_crawls)
+def geocode_and_tile(pages: DataFrame, index: GazetteerIndex) -> DataFrame:
+    """pages -> extract -> distributed cascade -> S2 level-13 + H3 res-9
+    cells, in TILE_SCHEMA. The route ``geocode_pages`` takes above the
+    broadcast gate, and the oracle the partition-local kernel is tested
+    against. ``pages`` must already be recrawl-deduplicated: addr_key =
+    url#pos is then unique by construction, so the cascade's duplicate-key
+    guard shuffle is skipped."""
+    addrs = pages_to_addresses(pages, dedup_crawls=False)
     res, _ = cascade(
-        addrs, index, check_results=check_results, with_rejected=False,
-        validate_unique=validate_unique, with_extra_house_number=False,
+        addrs, index, with_rejected=False, validate_unique=False,
+        with_extra_house_number=False,
     )
     # ONE Arrow crossing for both tilings (fused struct UDF) — two
     # separate pandas UDFs would serialize the same lat/lon twice
@@ -183,16 +185,27 @@ def geocode_and_tile(
     )
 
 
+def geocode_pages(pages: DataFrame, index: GazetteerIndex) -> DataFrame:
+    """Recrawl-deduplicated pages (batch or streaming) -> TILE_SCHEMA
+    tiles. The one place the engine is chosen: a broadcast-able gazetteer
+    runs the partition-local kernel (one narrow stage, no driver actions);
+    above the broadcast budget the distributed shuffle-join cascade is the
+    only sound shape. Both are value-identical by test."""
+    if index.broadcast_ok:
+        return geocode_and_tile_kernel(pages, index)
+    return geocode_and_tile(pages, index)
+
+
 def flagship(
     spark: SparkSession,
     sf_dir: str,
-    check_results: bool = True,
     replicate: int = 1,
     force_no_broadcast: bool = False,
     skew_hot: float = 0.0,
 ) -> DataFrame:
     """documents -> pages -> extract -> geocode -> S2 cells. Returns the
-    geocoded point table (one row per injected address).
+    geocoded point table (one row per injected address), always through
+    the distributed cascade.
 
     ``force_no_broadcast`` runs the shuffle-join cascade (the regime a
     gazetteer above the 800 MB broadcast gate hits at planet scale);
@@ -200,16 +213,11 @@ def flagship(
     hot-city regime — the bench compares its wall against the uniform
     leg)."""
     pages = pages_from_documents(spark, sf_dir, replicate=replicate, skew_hot=skew_hot)
-    # dedup_crawls=False: doc://<id> urls are unique BY CONSTRUCTION, and the
+    # no recrawl dedup: doc://<id> urls are unique BY CONSTRUCTION, and the
     # as-of window would shuffle every page WITH its html payload — a pure
-    # I/O tax on a no-op. Real crawl inputs (recrawls present) pay it; the
-    # operator is oracle-checked (asof_latest) and exercised on the synth
-    # dup-bearing pages table in tests.
-    # validate_unique=False: addr_key = url#pos is unique by construction ->
-    # skip the guard shuffle.
+    # I/O tax on a no-op.
     return geocode_and_tile(
-        pages, gazetteer_index(spark, force_no_broadcast=force_no_broadcast),
-        dedup_crawls=False, validate_unique=False, check_results=check_results,
+        pages, gazetteer_index(spark, force_no_broadcast=force_no_broadcast)
     )
 
 
@@ -228,8 +236,6 @@ def q_geocode_kernel(spark, sf_dir):
     (operators/geocode_kernel.py) — rows-only driver check; value-identity
     vs the distributed cascade is asserted per-fixture-class in
     tests/test_geocode_kernel.py."""
-    from ..operators.geocode_kernel import geocode_and_tile_kernel
-
     pages = pages_from_documents(spark, sf_dir)
     return geocode_and_tile_kernel(pages, gazetteer_index(spark))
 

@@ -1,22 +1,27 @@
 # -*- coding: utf-8 -*-
 """Streaming flagship: the geocode lifecycle over a pages STREAM.
 
-Two regimes, picked by the gazetteer broadcast gate:
+Every micro-batch goes through plans/flagship.geocode_pages, which picks
+the engine. The broadcast gate here picks only the PLAN SHAPE:
 
-- **broadcast-able gazetteer** (the common case): the partition-local
-  kernel (operators/geocode_kernel.py) needs no batch control flow, so
-  the whole lifecycle runs as ONE continuous streaming plan — source ->
+- **broadcast-able gazetteer** (the common case): geocode_pages runs the
+  partition-local kernel, which needs no batch control flow, so the
+  whole lifecycle runs as ONE continuous streaming plan — source ->
   dedup state -> mapInPandas kernel -> file sink. No foreachBatch, no
   per-epoch driver orchestration; exactly-once from the sink's
   _spark_metadata commit log.
-- **above the broadcast gate**: the cascade's driver loop (per-stage
-  counts, working-set shrink, local checkpoints) is batch control flow
-  that Structured Streaming cannot run inside a single logical plan — the
-  stream reuses it per micro-batch via ``foreachBatch``, Spark's
-  canonical pattern for lifting batch logic into a stream.
+- **above the broadcast gate**: geocode_pages runs the distributed
+  cascade, whose driver loop (per-stage counts, working-set shrink, local
+  checkpoints) is batch control flow that Structured Streaming cannot run
+  inside a single logical plan — so each micro-batch runs it through
+  ``foreachBatch``, Spark's canonical pattern for lifting batch logic
+  into a stream.
 
 What the stream layer adds on top of the batch engine:
 
+- cross-micro-batch recrawl dedup with native streaming state, upstream
+  of the engine (a per-batch window could never see a recrawl arriving
+  one epoch later);
 - exactly-once sink semantics: the streaming checkpointLocation skips
   micro-batches already committed (the resume analog of the reference's
   per-chunk loop, utils.py:1195-1279). The direct plan gets sink
@@ -29,7 +34,7 @@ What the stream layer adds on top of the batch engine:
   then stop — a crawl-backfill job shape).
 
 At cluster scale each micro-batch is one Iceberg/parquet file group; the
-batch cascade inside the closure broadcasts the same gazetteer index every
+cascade inside the closure broadcasts the same gazetteer index every
 epoch (it is built once, driver-side, outside the closure).
 """
 
@@ -46,6 +51,7 @@ from pyspark.sql.types import (
 )
 
 from ..operators.geocode import GazetteerIndex
+from ..plans.flagship import geocode_pages
 
 # micro-batches at or under this many rows run their cascade with a narrow
 # shuffle width — the per-epoch cost at live-tailing batch sizes is task
@@ -64,28 +70,6 @@ PAGES_SCHEMA = StructType(
 )
 
 
-def geocode_micro_batch(pages: DataFrame, index: GazetteerIndex) -> DataFrame:
-    """One micro-batch through the engine core. dedup_crawls is False on
-    both paths: cross-micro-batch recrawl dedup happens UPSTREAM in the
-    streaming plan (native dropDuplicates state wired in by
-    geocode_pages_stream), where per-key state outlives the micro-batch —
-    a per-batch window could never see a recrawl arriving one epoch later.
-
-    Path choice is the broadcast gate: a broadcast-able gazetteer runs the
-    partition-local kernel (geocode_kernel.py — the whole lifecycle in ONE
-    narrow stage, no per-stage driver actions; measured ~8x less per-epoch
-    fixed cost than the distributed cascade, value-identical by test);
-    above the broadcast budget the distributed shuffle-join cascade is the
-    only sound shape and the micro-batch pays its driver-action cost."""
-    if index.broadcast_ok:
-        from ..operators.geocode_kernel import geocode_and_tile_kernel
-
-        return geocode_and_tile_kernel(pages, index)
-    from ..plans.flagship import geocode_and_tile
-
-    return geocode_and_tile(pages, index, dedup_crawls=False, validate_unique=False)
-
-
 def geocode_pages_stream(
     spark: SparkSession,
     input_dir: str,
@@ -97,11 +81,11 @@ def geocode_pages_stream(
     max_files_per_trigger: int = 1,
 ):
     """File-source pages stream -> stateful first-seen recrawl dedup ->
-    batch cascade per micro-batch -> parquet sink. Returns the started
-    StreamingQuery; caller awaits termination.
+    geocode_pages -> parquet sink. Returns the started StreamingQuery;
+    caller awaits termination.
 
-    ``dedup_recrawls`` composes streaming/stateful.first_seen_stream
-    UPSTREAM of the cascade: a url re-delivered in ANY later micro-batch
+    ``dedup_recrawls`` drops recrawls with native streaming state UPSTREAM
+    of geocode_pages: a url re-delivered in ANY later micro-batch
     (recrawl, retry, mirror) is dropped by per-key state before paying
     extraction + geocoding. Stream semantics are FIRST-arrival-wins (a
     stream cannot know a newer crawl is coming); the batch lifecycle's
@@ -158,17 +142,21 @@ def geocode_pages_stream(
         # files, so a crash between data write and commit is invisible).
         # Measured: 8x 5k-page epochs 12.2s (foreachBatch kernel) -> 7.1s
         # warm / 8.8s cold at local[32], shuffle width 8.
-        from ..operators.geocode_kernel import geocode_and_tile_kernel
-
-        tiled = geocode_and_tile_kernel(stream, index, widen=False)
         writer = (
-            tiled.writeStream.format("parquet")
+            geocode_pages(stream, index).writeStream.format("parquet")
             .option("path", out_dir)
-            .option("checkpointLocation", checkpoint_dir)
         )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+    else:
+        writer = stream.writeStream.foreachBatch(_epoch_sink(index, out_dir))
+    writer = writer.option("checkpointLocation", checkpoint_dir)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def _epoch_sink(index: GazetteerIndex, out_dir: str):
+    """The foreachBatch body: one micro-batch through geocode_pages into
+    its own ``epoch`` partition of ``out_dir``."""
 
     def _one_batch(pages: DataFrame, epoch_id: int) -> None:
         sess = pages.sparkSession
@@ -186,29 +174,20 @@ def geocode_pages_stream(
         if clamp:
             sess.conf.set("spark.sql.shuffle.partitions", str(_SMALL_BATCH_SHUFFLE))
         try:
-            _write_batch(pages, epoch_id)
+            # IDEMPOTENT sink: a blind append would duplicate rows when a
+            # micro-batch is replayed (crash between the data write and the
+            # streaming commit log). Dynamic partition overwrite keyed on
+            # the epoch makes the replay rewrite exactly its own partition.
+            (
+                geocode_pages(pages, index)
+                .withColumn("epoch", F.lit(epoch_id).cast("long"))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("epoch")
+                .parquet(out_dir)
+            )
         finally:
             if clamp:
                 sess.conf.set("spark.sql.shuffle.partitions", prev)
 
-    def _write_batch(pages: DataFrame, epoch_id: int) -> None:
-        out = geocode_micro_batch(pages, index).withColumn(
-            "epoch", F.lit(epoch_id).cast("long")
-        )
-        # IDEMPOTENT sink: a blind append would duplicate rows when a
-        # micro-batch is replayed (crash between the data write and the
-        # streaming commit log). Dynamic partition overwrite keyed on the
-        # epoch makes the replay rewrite exactly its own partition.
-        (
-            out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
-            .parquet(out_dir)
-        )
-
-    writer = stream.writeStream.foreachBatch(_one_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _one_batch

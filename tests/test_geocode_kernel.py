@@ -76,23 +76,28 @@ def test_cascade_kernel_matches_distributed_on_all_fixture_classes(
 def test_pages_kernel_matches_distributed_pipeline(spark):
     """pages -> extract -> cascade -> tiles: the one-stage kernel equals
     plans/flagship.geocode_and_tile row-for-row INCLUDING dtypes (the
-    sha256-pinned flagship output transitively pins the kernel)."""
+    sha256-pinned flagship output transitively pins the kernel), and so
+    does geocode_pages on either side of the broadcast gate."""
     from nominatimwrapper_spark.plans.flagship import (
         gazetteer_index,
         geocode_and_tile,
+        geocode_pages,
         pages_from_documents,
     )
 
     idx = gazetteer_index(spark)
     pages = pages_from_documents(spark, SF_DIR).localCheckpoint(eager=True)
-    exp = geocode_and_tile(
-        pages, idx, dedup_crawls=False, validate_unique=False
-    ).toPandas()
-    got = geocode_and_tile_kernel(pages, idx).toPandas()
-    pd.testing.assert_frame_equal(
-        exp.sort_values("addr_key").reset_index(drop=True),
-        got[exp.columns].sort_values("addr_key").reset_index(drop=True),
-    )
+    exp = geocode_and_tile(pages, idx).toPandas()
+    exp = exp.sort_values("addr_key").reset_index(drop=True)
+    for got in (
+        geocode_and_tile_kernel(pages, idx),
+        geocode_pages(pages, idx),
+        geocode_pages(pages, gazetteer_index(spark, force_no_broadcast=True)),
+    ):
+        got = got.toPandas()
+        pd.testing.assert_frame_equal(
+            exp, got[exp.columns].sort_values("addr_key").reset_index(drop=True)
+        )
 
 
 def test_kernel_single_job_no_shuffle(spark):

@@ -108,12 +108,10 @@ def test_streaming_geocode_matches_batch_and_resumes(spark, tmp_path):
 
     from nominatimwrapper_spark.plans.flagship import (
         gazetteer_index,
+        geocode_pages,
         pages_from_documents,
     )
-    from nominatimwrapper_spark.streaming.geocode_stream import (
-        geocode_micro_batch,
-        geocode_pages_stream,
-    )
+    from nominatimwrapper_spark.streaming.geocode_stream import geocode_pages_stream
 
     sf001 = "/root/testdata/sf0.001"
     pages = pages_from_documents(spark, sf001).localCheckpoint(eager=True)
@@ -138,7 +136,7 @@ def test_streaming_geocode_matches_batch_and_resumes(spark, tmp_path):
     q = geocode_pages_stream(spark, str(in_dir), index, out_dir, ck)
     q.awaitTermination()
     got1 = spark.read.parquet(out_dir).toPandas()
-    exp1 = geocode_micro_batch(half_a, index).toPandas()
+    exp1 = geocode_pages(half_a, index).toPandas()
     key = ["addr_key", "method", "place_id", "cell13"]
     pd.testing.assert_frame_equal(
         got1[key].sort_values("addr_key").reset_index(drop=True),
@@ -152,7 +150,7 @@ def test_streaming_geocode_matches_batch_and_resumes(spark, tmp_path):
     got2 = spark.read.parquet(out_dir).toPandas()
     # every address geocoded exactly once: wave-1 rows were NOT reprocessed
     assert got2["addr_key"].is_unique
-    exp_all = geocode_micro_batch(pages, index).toPandas()
+    exp_all = geocode_pages(pages, index).toPandas()
     pd.testing.assert_frame_equal(
         got2[key].sort_values("addr_key").reset_index(drop=True),
         exp_all[key].sort_values("addr_key").reset_index(drop=True),
@@ -203,7 +201,9 @@ def test_geocode_job_cli_direct_file_launch(spark, tmp_path):
 def test_geocode_job_partitioned_resume(spark, tmp_path):
     """The spark-submit job shape: per-crawl-date partitions through the
     S7 checkpointer. Run -> all computed; rerun -> all resumed (zero
-    recomputation); a lost manifest -> exactly that partition recomputed."""
+    recomputation); a lost manifest -> exactly that partition recomputed.
+    Pages with a null warc_ts form their own partition: geocoded once
+    without date bounds, not selected with them."""
     import os
 
     from nominatimwrapper_spark.jobs.geocode_job import run_job
@@ -214,12 +214,12 @@ def test_geocode_job_partitioned_resume(spark, tmp_path):
     from nominatimwrapper_spark.sources.pages_io import write_pages_partitioned
 
     pages = pages_from_documents(spark, "/root/testdata/sf0.001")
-    # spread across two crawl dates
+    # spread across two crawl dates plus the null-date partition
     pages = pages.withColumn(
         "warc_ts",
-        F.when(F.crc32("url") % 2 == 0, F.col("warc_ts")).otherwise(
-            F.col("warc_ts") + F.expr("INTERVAL 1 DAY")
-        ),
+        F.when(F.crc32("url") % 3 == 0, F.col("warc_ts"))
+        .when(F.crc32("url") % 3 == 1, F.col("warc_ts") + F.expr("INTERVAL 1 DAY"))
+        .otherwise(F.lit(None).cast("timestamp")),
     )
     pages_dir = str(tmp_path / "pages")
     write_pages_partitioned(pages, pages_dir)
@@ -227,7 +227,7 @@ def test_geocode_job_partitioned_resume(spark, tmp_path):
     out = str(tmp_path / "out")
 
     m1 = run_job(spark, pages_dir, gaz, out)
-    assert len(m1) == 2 and all(not m["resumed"] for m in m1.values())
+    assert len(m1) == 3 and all(not m["resumed"] for m in m1.values())
     assert sum(m["rows_out"] for m in m1.values()) == pages.count()
     assert all(m["stats"]["methods"].get("orig", 0) > 0 for m in m1.values())
 
@@ -242,6 +242,84 @@ def test_geocode_job_partitioned_resume(spark, tmp_path):
     assert all(m["resumed"] for p, m in m3.items() if p != victim)
     assert m3[victim]["rows_out"] == m1[victim]["rows_out"]
 
+    dated = run_job(spark, pages_dir, gaz, out, date_from="2000-01-01")
+    assert sorted(dated) == sorted(m1)[:2]
+    assert all(m["resumed"] for m in dated.values())
+
+
+def test_streaming_above_broadcast_gate_epoch_sink(spark, tmp_path):
+    """Above the broadcast gate the stream runs the cascade per micro-batch
+    through foreachBatch (pinned batch, small-batch shuffle clamp, epoch-
+    partitioned idempotent sink): one epoch partition per input file,
+    every address exactly once, and the keys equal geocode_pages on the
+    union of the files."""
+    import glob
+    import shutil
+
+    from nominatimwrapper_spark.plans.flagship import (
+        gazetteer_index,
+        geocode_pages,
+        pages_from_documents,
+    )
+    from nominatimwrapper_spark.streaming.geocode_stream import geocode_pages_stream
+
+    pages = pages_from_documents(spark, "/root/testdata/sf0.001").limit(60)
+    pages = pages.localCheckpoint(eager=True)
+    index = gazetteer_index(spark, force_no_broadcast=True)
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    for i in range(2):
+        d = str(tmp_path / f"_stage_{i}")
+        pages.filter(F.crc32(F.col("url")) % 2 == i).coalesce(1).write.parquet(d)
+        shutil.move(glob.glob(f"{d}/part-*.parquet")[0], str(in_dir / f"00{i}.parquet"))
+        shutil.rmtree(d)
+
+    out_dir = str(tmp_path / "out")
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")  # wide enough to clamp
+    try:
+        q = geocode_pages_stream(spark, str(in_dir), index, out_dir, str(tmp_path / "ck"))
+        q.awaitTermination()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    got = spark.read.parquet(out_dir).toPandas()
+
+    assert sorted(got["epoch"].unique()) == [0, 1]
+    assert got["addr_key"].is_unique
+    exp = geocode_pages(pages, index).toPandas()
+    key = ["addr_key", "method", "place_id", "cell13", "h3_9"]
+    pd.testing.assert_frame_equal(
+        got[key].sort_values("addr_key").reset_index(drop=True),
+        exp[key].sort_values("addr_key").reset_index(drop=True),
+    )
+
+
+def test_partition_fingerprint_pinned(tmp_path):
+    """Partition fingerprints hash (name, size) of the partition's files
+    and of the gazetteer (a dir or one file). Pinned values: a changed
+    fingerprint would recompute every existing output partition."""
+    from nominatimwrapper_spark.jobs.geocode_job import (
+        _files_signature,
+        partition_fingerprint,
+    )
+
+    part = tmp_path / "pages" / "crawl_date=2025-03-01"
+    part.mkdir(parents=True)
+    (part / "part-00000.parquet").write_bytes(b"x" * 3)
+    (part / "part-00001.parquet").write_bytes(b"x" * 5)
+    gaz_dir = tmp_path / "gaz"
+    gaz_dir.mkdir()
+    (gaz_dir / "part-00000.parquet").write_bytes(b"x" * 7)
+    gaz_file = tmp_path / "gaz.parquet"
+    gaz_file.write_bytes(b"x" * 11)
+    pages = str(tmp_path / "pages")
+    assert partition_fingerprint(
+        pages, "2025-03-01", _files_signature(str(gaz_dir))
+    ) == "d9ca6a9c0086deda"
+    assert partition_fingerprint(
+        pages, "2025-03-01", _files_signature(str(gaz_file))
+    ) == "ad7d3de1de1c22e2"
+
 
 def test_streaming_flagship_with_recrawl_dedup(spark, tmp_path):
     """The COMPOSED streaming flagship: stateful first-seen dedup wired
@@ -254,12 +332,10 @@ def test_streaming_flagship_with_recrawl_dedup(spark, tmp_path):
 
     from nominatimwrapper_spark.plans.flagship import (
         gazetteer_index,
+        geocode_pages,
         pages_from_documents,
     )
-    from nominatimwrapper_spark.streaming.geocode_stream import (
-        geocode_micro_batch,
-        geocode_pages_stream,
-    )
+    from nominatimwrapper_spark.streaming.geocode_stream import geocode_pages_stream
     from nominatimwrapper_spark.streaming.stateful import first_seen_batch
 
     sf001 = "/root/testdata/sf0.001"
@@ -297,7 +373,7 @@ def test_streaming_flagship_with_recrawl_dedup(spark, tmp_path):
 
     # == batch lifecycle: first-seen dedup over ALL arrivals + cascade
     all_arrivals = wave1.unionByName(wave2)
-    exp = geocode_micro_batch(
+    exp = geocode_pages(
         first_seen_batch(all_arrivals, key="url", order="warc_ts"),
         gazetteer_index(spark),
     ).toPandas()
